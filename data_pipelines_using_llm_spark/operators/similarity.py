@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from data_pipelines_using_llm_spark.operators.caching import barrier
+from data_pipelines_using_llm_spark.sources.tables import spread_to_cores
 
 DIM = 64
 N_TABLES = 2
@@ -354,7 +355,7 @@ def ivf_centroids(base: DataFrame, cell_col: str) -> DataFrame:
     fixed-dimension (``DIM``) non-null vectors — the embeddings corpus
     contract every caller already relies on."""
     sums = (
-        _spread(base)
+        spread_to_cores(base)
         .filter(F.col("v").isNotNull())  # NULL vectors: no sum, no count
         .groupBy(F.col(cell_col).alias("cell"))
         .agg(*_mean_aggs(_try_elem("v"), DIM))
@@ -499,17 +500,6 @@ def dist2(a: Column, b: Column) -> Column:
     )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Scale-adaptive parallelism floor for the literal-centroid argmin
-    kernels (k·d fold steps per row) — see
-    :func:`data_pipelines_using_llm_spark.sources.tables.spread_to_cores`
-    (shared implementation).  Results are partitioning-independent
-    everywhere this is used (exact order-free sums, pure per-row maps)."""
-    from data_pipelines_using_llm_spark.sources.tables import spread_to_cores
-
-    return spread_to_cores(df)
-
-
 def _sql_double_lit(x: float) -> str:
     """Exact SQL double literal: ``repr`` emits the shortest decimal that
     round-trips to the same binary64, and Spark's parser reads it with
@@ -594,198 +584,35 @@ def kmeans_assign(
     with the ``k`` lowest ids) and ORDER-INDEPENDENT centroid updates
     (decimal-exact per-dimension means, see :func:`ivf_centroids`).
 
-    The iterative shape on Spark (r14 optimization — the literal-centroid
-    formulation): centroids are CONTROL-PLANE state (k·d doubles — the
-    quantizer, never the corpus), so each Lloyd round collects the k
-    updated mean vectors to the driver and embeds them as literals in the
-    next round's argmin expression (:func:`_least_assign`).  A round is
-    then ONE job: corpus scan → map-side argmin → map-side partial
-    decimal sums → one k-row exchange → collect.  The previous
-    formulation (broadcast-join the centroid table, min(struct) argmin
-    aggregation, posexplode mean update) ran 3 exchanges and ~7 AQE
-    stage-jobs per round for the identical arithmetic; at 100 TB the
-    collect is still k·d scalars (the same size the broadcast shipped)
-    and the corpus still moves zero times per round.
-
-    Arithmetic is unchanged and bit-identical: sequential-fold squared
-    distances, (d2, lowest-cid) argmin tie-break, per-dimension
-    decimal(28,10) sums with the double division applied after the cast
-    — collected doubles re-enter the plan exactly (IEEE round-trip).
-    Assumes fixed-dimension (``DIM``) non-null vectors, which every
-    caller guarantees (the embeddings corpus contract).
+    Training is :func:`lloyd_rounds` with the coarse family only: the
+    centroids are CONTROL-PLANE state (k·d doubles — the quantizer,
+    never the corpus), so each round is one job (corpus scan → map-side
+    literal-centroid argmin → map-side partial decimal sums → one k-row
+    exchange → collect).  The final assignment is a pure map against
+    the last centroids: ``(vec_id, cluster_id, dist)``, empty when no
+    vector has an id below ``k``.  Assumes fixed-dimension (``DIM``)
+    non-null vectors, which every caller guarantees (the embeddings
+    corpus contract).
     """
     base = barrier(
-        _spread(
+        spread_to_cores(
             df.select(
                 F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v")
             )
         )
     )
-    cents = _kmeans_rounds(base, k, iters)
-    if cents is None:  # no seedable vectors: the joined formulation yielded 0 rows
+    cents, _ = lloyd_rounds(base, k, iters)
+    if not cents:
         return base.select(
             "vec_id",
             F.lit(None).cast("long").alias("cluster_id"),
             F.lit(None).cast("double").alias("dist"),
         ).filter(F.lit(False))
-    # final assignment against the last updated centroids — a pure map
     dc = F.expr(_least_assign_sql("v", cents))
     return base.select(
         "vec_id",
         dc["cid"].alias("cluster_id"),
         F.round(F.sqrt(dc["d2"]), 6).alias("dist"),
-    )
-
-
-def _kmeans_rounds(base: DataFrame, k: int, iters: int) -> list | None:
-    """The Lloyd-round loop of :func:`kmeans_assign` over a persisted
-    (vec_id, v) base — seed collect + ``iters`` literal-centroid rounds;
-    returns the final ``[(cid, cv)]`` list (None when no seedable
-    vectors exist).  Factored out (r15) so callers that only need the
-    CENTROIDS as control-plane literals (the self-trained IVF rows —
-    the final assignment is then a projected column, no assignment
-    table, no join) share the exact round arithmetic."""
-    seed = base.filter(F.col("vec_id") < k).select("vec_id", "v").collect()
-    cents = sorted((int(r["vec_id"]), list(r["v"])) for r in seed)
-    if not cents:
-        return None
-    dim = len(cents[0][1])  # fixture dims vary; the corpus contract is DIM
-    for _ in range(iters):
-        # v IS NOT NULL before the mean aggregation (r14 ADVICE): the
-        # exploded form excluded NULL vectors from BOTH sum and count
-        # (posexplode of NULL yields no rows); count(1) alone would
-        # silently inflate the mean divisor.  Free at any scale.
-        sums = (
-            base.filter(F.col("v").isNotNull())
-            .select(
-                F.expr(f"({_least_assign_sql('v', cents)}).cid").alias("cid"),
-                "v",
-            )
-            .groupBy("cid")
-            .agg(*_mean_aggs(_try_elem("v"), dim))
-        )
-        rows = sums.select("cid", _means_array(dim).alias("cv")).collect()
-        cents = sorted((int(r["cid"]), list(r["cv"])) for r in rows)
-    return cents
-
-
-def kmeans_cents_literals(
-    df: DataFrame, id_col: str, vec_col: str, k: int = 10, iters: int = 2
-) -> tuple[list, DataFrame] | None:
-    """Final k-means centroids as a literal list — :func:`kmeans_assign`
-    minus the assignment table: callers project the cell id as a column
-    (``_least_assign_sql`` over the final centroids) instead of joining
-    a materialized assignment, which removes the persist+count
-    materialization job AND the corpus-wide assignment join from the
-    self-trained IVF serve paths.  Same seed collect, same rounds, same
-    IEEE round-trip — centroid values are bit-identical to
-    :func:`kmeans_assign`'s.  Returns ``(cents, base)`` — the persisted
-    (vec_id, v) base is handed back so the serve side reuses the
-    materialized doubles instead of re-scanning the source (``v`` is
-    already array<double>; ``to_double`` over it is value-identity) —
-    or None when no seedable vectors exist."""
-    base = barrier(
-        _spread(
-            df.select(
-                F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v")
-            )
-        )
-    )
-    cents = _kmeans_rounds(base, k, iters)
-    if cents is None:
-        return None
-    return cents, base
-
-
-def kmeans_assign_arrow(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-    iters: int = 2,
-) -> DataFrame:
-    """Arrow/numpy Lloyd's k-means — the 100 TB execution path for the
-    clustering family (:func:`kmeans_assign` is the oracle-exact JVM-fold
-    twin, kept for the cross-engine hash gates).
-
-    Same semantics: deterministic seeding (the ``k`` lowest ids),
-    argmin assignment with lowest-cluster-id tie-break, and the SAME
-    decimal-exact per-dimension centroid update on the JVM side — so the
-    per-round centroids match the exact variant to the last ulp of the
-    double cast.  What changes is the assignment kernel: centroids ride
-    in the task closure (k×d doubles, re-collected once per round — a
-    control-plane read bounded by the quantizer size, never the corpus)
-    and each partition computes ONE ``|batch| × k`` squared-distance
-    GEMM inside ``mapInPandas`` instead of evaluating interpreted
-    higher-order-function folds per (vector, centroid) pair.  numpy's
-    pairwise summation can differ from the sequential fold in the last
-    ulp, so assignments may flip on exact distance near-ties — the
-    agreement test (tests/test_similarity.py) pins ≥99% assignment
-    agreement and the registered gates keep using the fold variant.
-    """
-    import numpy as np
-    import pandas as pd
-
-    base = barrier(
-        df.select(F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v"))
-    )
-    cent_rows = (
-        base.filter(F.col("vec_id") < k)
-        .orderBy("vec_id")
-        .collect()
-    )
-    cids = np.array([r["vec_id"] for r in cent_rows], dtype=np.int64)
-    C = np.array([r["v"] for r in cent_rows], dtype=np.float64)
-
-    def assigner(cids_: "np.ndarray", C_: "np.ndarray"):
-        def assign(batches):
-            c_sq = (C_ * C_).sum(axis=1)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["v"].to_numpy())
-                # ||v-c||^2 = |v|^2 - 2 v.c + |c|^2 ; |v|^2 constant per row
-                d2 = -2.0 * (V @ C_.T) + c_sq
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "v": pdf["v"],
-                        "cid": cids_[np.argmin(d2, axis=1)],
-                        "d2": ((V * V).sum(axis=1) + d2.min(axis=1)),
-                    }
-                )
-
-        return assign
-
-    schema = "vec_id long, v array<double>, cid long, d2 double"
-    for _ in range(iters):
-        assigned = base.mapInPandas(assigner(cids, C), schema=schema)
-        comp = assigned.select("cid", F.posexplode("v").alias("pos", "x"))
-        cents = (
-            comp.groupBy("cid", "pos")
-            .agg(
-                F.sum(F.col("x").cast("decimal(28,10)")).cast("double").alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select("cid", "pos", (F.col("s") / F.col("n")).alias("c"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                    lambda s: s["c"],
-                ).alias("cv")
-            )
-            .orderBy("cid")
-            .collect()
-        )
-        cids = np.array([r["cid"] for r in cents], dtype=np.int64)
-        C = np.array([r["cv"] for r in cents], dtype=np.float64)
-
-    final = base.mapInPandas(assigner(cids, C), schema=schema)
-    return final.select(
-        "vec_id",
-        F.col("cid").alias("cluster_id"),
-        F.round(F.sqrt(F.greatest(F.col("d2"), F.lit(0.0))), 6).alias("dist"),
     )
 
 
@@ -1349,130 +1176,13 @@ PQ_K = 16  # codewords per sub-codebook (codes fit 4 bits)
 PQ_ITERS = 2
 
 
-def pq_train(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    iters: int = PQ_ITERS,
-) -> tuple[DataFrame, DataFrame]:
-    """Product-quantization training (Jégou et al., "Product Quantization
-    for Nearest Neighbor Search", TPAMI 2011): split each vector into
-    ``m`` contiguous subvectors and run an independent deterministic
-    k-means (:func:`kmeans_assign`: lowest-id seeding, decimal-exact
-    centroid means) in each subspace.
-
-    Returns ``(codes, cents)``:
-    - ``codes`` (vec_id, m, code) — the compressed corpus: m small ints
-      per vector (m·log2(k) bits ≈ 2 bytes here vs 256 bytes float32 —
-      the 100 TB corpus becomes ~1 TB of codes).
-    - ``cents`` (m, code, cv, cn2) — sub-codebooks re-derived from the
-      FINAL assignment by decimal-exact per-dimension means (the same
-      assignment→centroid convention :func:`ivf_centroids` uses), plus
-      each codeword's exact-fold squared norm for reconstruction norms.
-
-    The m sub-quantizers are mathematically independent, so they are
-    trained JOINTLY over one exploded (vec_id, m, sv) table: every
-    Lloyd round is ONE broadcast-centroid argmin (the m x k centroid
-    table is k·DIM doubles total — same bytes as one full-space k-means)
-    plus ONE (m, code, pos) centroid-update shuffle, instead of m
-    sequential k-means jobs.  Per-(vec, m) argmin ties break to the
-    lowest code id and centroid means are decimal-exact, bit-identical
-    to running :func:`kmeans_assign` per subspace (the oracle unrolls
-    the per-subspace formulation and the gate agrees).
-    """
-    subdim = DIM // m
-    base = barrier(
-        _spread(
-            df.select(
-                F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v")
-            )
-        )
-    )
-    seed = base.filter(F.col("vec_id") < k).select("vec_id", "v").collect()
-    if not seed:  # no seedable vectors (r14 ADVICE): the joined
-        # formulation degraded to empty results; the literal argmin
-        # would emit a zero-arg least() — an AnalysisException.  Mirror
-        # kmeans_assign's empty early return with the same schemas.
-        codes = base.select(
-            "vec_id",
-            F.lit(None).cast("int").alias("m"),
-            F.lit(None).cast("long").alias("code"),
-        ).filter(F.lit(False))
-        cents_df = base.select(
-            F.lit(None).cast("int").alias("m"),
-            F.lit(None).cast("long").alias("code"),
-            F.lit(None).cast("array<double>").alias("cv"),
-            F.lit(None).cast("double").alias("cn2"),
-        ).filter(F.lit(False))
-        return codes, cents_df
-    # per-subspace literal codebooks: cents[mi] = [(cid, subvector), ...]
-    cents = {
-        mi: sorted(
-            (int(r["vec_id"]), list(r["v"])[mi * subdim : (mi + 1) * subdim])
-            for r in seed
-        )
-        for mi in range(m)
-    }
-
-    def codes_arr(cc: dict) -> Column:
-        # one (m-long) array of per-subspace argmin codes, computed
-        # MAP-SIDE against literal codebooks (:func:`_least_assign_sql`)
-        # — the joint m-subspace Lloyd round with zero joins
-        return F.expr(_pq_codes_arr_sql(cc, m, subdim))
-
-    # per-round: explode the m codes (map-side), ONE (m, cid) exchange of
-    # per-dimension decimal partials, collect the m·k updated sub-means
-    def round_means(cc: dict) -> dict:
-        # NULL vectors excluded from sums AND counts (r14 ADVICE — the
-        # exploded form's semantics; see kmeans_assign)
-        ex = base.filter(F.col("v").isNotNull()).select(
-            "v", F.posexplode(codes_arr(cc)).alias("m", "cid")
-        )
-        sums = ex.groupBy("m", "cid").agg(
-            *_mean_aggs(
-                lambda i: f"try_element_at(v, CAST(m * {subdim} + {i} AS INT))",
-                subdim,
-            )
-        )
-        rows = sums.select("m", "cid", _means_array(subdim).alias("cv")).collect()
-        out: dict = {mi: [] for mi in range(m)}
-        for r in rows:
-            out[int(r["m"])].append((int(r["cid"]), list(r["cv"])))
-        return {mi: sorted(v) for mi, v in out.items()}
-
-    for _ in range(iters):
-        cents = round_means(cents)
-    # final code table: a pure map over the persisted base (no exchange)
-    codes = barrier(
-        base.select(
-            "vec_id", F.posexplode(codes_arr(cents)).alias("m", "code")
-        )
-    )
-    # sub-codebooks re-derived from the FINAL assignment — same fused
-    # one-exchange decimal-mean shape, kept in-engine (m·k rows out)
-    ex = base.filter(F.col("v").isNotNull()).select(
-        "v", F.posexplode(codes_arr(cents)).alias("m", "code")
-    )
-    sums = ex.groupBy("m", "code").agg(
-        *_mean_aggs(
-            lambda i: f"try_element_at(v, CAST(m * {subdim} + {i} AS INT))",
-            subdim,
-        )
-    )
-    cents_df = sums.select(
-        "m", "code", _means_array(subdim).alias("cv")
-    ).select("m", "code", "cv", dot(F.col("cv"), F.col("cv")).alias("cn2"))
-    return codes, barrier(cents_df)
-
-
 def _pq_codes_arr_sql(cc: dict, m: int, subdim: int) -> str:
     """The m-long array of per-subspace argmin codes as ONE SQL string —
     map-side against literal codebooks (:func:`_least_assign_sql`), the
-    joint m-subspace assignment with zero joins.  Shared by
-    :func:`pq_train` and the fused trainer so the expression text (and
-    therefore every bit of the assignment) has one definition."""
+    joint m-subspace assignment with zero joins.  Shared by the final
+    code projection of :func:`train_quantizers` and the PQ families of
+    :func:`lloyd_rounds` so the expression text (and therefore every
+    bit of the assignment) has one definition."""
     parts = ",".join(
         f"({_least_assign_sql(f'slice(v, {mi * subdim + 1}, {subdim})', cc[mi])}).cid"
         for mi in range(m)
@@ -1480,50 +1190,46 @@ def _pq_codes_arr_sql(cc: dict, m: int, subdim: int) -> str:
     return f"array({parts})"
 
 
-def ivfpq_train_literals(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-    iters: int = 2,
+_COARSE = -1  # family id of the coarse quantizer; PQ families are 0..m-1
+
+
+def lloyd_rounds(
+    base: DataFrame,
+    k: int = 0,
+    iters: int = 0,
     m: int = PQ_M,
-    kcodes: int = PQ_K,
-    pq_iters: int = PQ_ITERS,
-) -> tuple[list, dict, DataFrame] | None:
-    """FUSED coarse-k-means + PQ training over ONE persisted base —
-    the r15 cut of the self-contained IVFPQ rows' training floor
-    (guide §1.2-1, §2.4, §2.6): the coarse quantizer and the m
-    sub-quantizers are mathematically independent, but the r14 code ran
-    them as two sequential Lloyd chains over the SAME corpus (one seed
-    collect + one aggregation job per family per round ≈ 6 sequential
-    jobs).  Both are control-plane state (k·d + m·k·subdim doubles), so
-    each fused round evaluates BOTH argmin families map-side in one
-    pass and groups their decimal partials under one (family, cid) key
-    — ONE corpus-scan job per round, one seed collect total.
+    kcodes: int = 0,
+    pq_iters: int = 0,
+) -> tuple[list, dict]:
+    """THE Lloyd loop of every k-means, PQ and IVFPQ trainer, over a
+    persisted ``(vec_id, v)`` base.  Two kinds of quantizer family train
+    in it side by side: the coarse family (``k`` centroids over ``v``,
+    ``iters`` rounds) and ``m`` PQ families (``kcodes`` codewords each
+    over ``slice(v, mi·subdim + 1, subdim)``, ``pq_iters`` rounds).
+    ``k = 0`` or ``kcodes = 0`` leaves that kind out.
 
-    Bit-exactness: the per-family groups are disjoint (family = -1 for
-    coarse, 0..m-1 for PQ), so each group aggregates exactly the value
-    multiset the unfused round aggregated, with the same expressions —
-    cast-decimal(28,10)-then-sum, s/n double division, the
-    (d2, lowest-cid) literal-argmin tie-break, IEEE round-trip of the
-    collected doubles (all unchanged from r14's literal-centroid
-    formulation; proven by the oracle gates).
+    Seeding is deterministic: the vectors with the lowest ids, one
+    collect for every family.  Centroids are control-plane state
+    (k·d + m·kcodes·subdim doubles), so a round evaluates every live
+    family's argmin MAP-SIDE against literal centroids
+    (:func:`_least_assign_sql`), groups the decimal partials under one
+    (family, cid) key and collects the updated means — ONE corpus-scan
+    job per round however many families train.  The groups of
+    different families are disjoint, so each aggregates exactly the
+    value multiset a loop over that family alone would: fused and
+    separate runs give bit-identical centroids
+    (tests/test_similarity.py pins this).
 
-    Returns ``(coarse, pqc, base)`` — the final coarse centroid list
-    ``[(cid, cv)]``, the per-subspace codebooks ``{mi: [(cid, cv)]}``,
-    and the persisted (vec_id, v) base for the serve side to reuse — or
-    ``None`` when either seed set is empty (the caller falls back to
-    the unfused formulations, which carry the degenerate-input
-    semantics).
-    """
+    The arithmetic is the one the DuckDB oracles unroll: sequential-fold
+    squared distances, (d2, lowest-cid) argmin tie-break, NULL vectors
+    excluded from sums and counts, decimal(28,10) sums followed by one
+    double division, and collected doubles re-entering the plan exactly
+    (IEEE round-trip of the literal text).
+
+    Returns ``(coarse, pqc)`` — the final coarse centroids ``[(cid, cv)]``
+    and the codebooks ``{mi: [(cid, cv)]}``; ``[]`` / ``{}`` for a kind
+    with no seedable vector (no id below ``k`` / ``kcodes``)."""
     subdim = DIM // m
-    base = barrier(
-        _spread(
-            df.select(
-                F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v")
-            )
-        )
-    )
     seed = (
         base.filter(F.col("vec_id") < max(k, kcodes))
         .select("vec_id", "v")
@@ -1533,46 +1239,47 @@ def ivfpq_train_literals(
         (int(r["vec_id"]), list(r["v"])) for r in seed if r["vec_id"] < k
     )
     pq_seed = [r for r in seed if r["vec_id"] < kcodes]
-    if not coarse or not pq_seed:
-        return None
     pqc = {
         mi: sorted(
             (int(r["vec_id"]), list(r["v"])[mi * subdim : (mi + 1) * subdim])
             for r in pq_seed
         )
         for mi in range(m)
-    }
-    dim = len(coarse[0][1])  # fixture dims vary; the corpus contract is DIM
-    width = max(dim, subdim)
+    } if pq_seed else {}
+    # fixture dims vary; the corpus contract is DIM
+    dim = len(coarse[0][1]) if coarse else subdim
 
     def fused_elem(i: int) -> str:
-        # family -1 reads position i of the full vector (kmeans_assign's
-        # elem); families 0..m-1 read position fam·subdim+i (pq_train's
-        # elem) for i <= subdim and contribute nothing beyond it — NULL
-        # is excluded from the decimal sum exactly like the absent
-        # column of the narrower unfused aggregation.
+        # the coarse family reads position i of the full vector, PQ
+        # family fam reads position fam·subdim+i for i <= subdim and
+        # contributes nothing beyond it — NULL is excluded from the
+        # decimal sum exactly like an absent column
         if i <= subdim:
             return (
-                f"CASE WHEN fam = -1 THEN try_element_at(v, {i}) "
+                f"CASE WHEN fam = {_COARSE} THEN try_element_at(v, {i}) "
                 f"ELSE try_element_at(v, CAST(fam * {subdim} + {i} AS INT)) "
                 "END"
             )
-        return f"CASE WHEN fam = -1 THEN try_element_at(v, {i}) END"
+        return f"CASE WHEN fam = {_COARSE} THEN try_element_at(v, {i}) END"
 
-    rounds = max(iters, pq_iters)
-    for it in range(rounds):
+    for it in range(max(iters, pq_iters)):
+        live_coarse = bool(coarse) and it < iters
+        live_pq = bool(pqc) and it < pq_iters
+        if not (live_coarse or live_pq):
+            break
         entries = []
-        if it < iters:
+        if live_coarse:
             entries.append(
-                "named_struct('fam', -1, 'cid', "
+                f"named_struct('fam', {_COARSE}, 'cid', "
                 f"({_least_assign_sql('v', coarse)}).cid)"
             )
-        if it < pq_iters:
+        if live_pq:
             for mi in range(m):
                 entries.append(
                     f"named_struct('fam', {mi}, 'cid', "
                     f"({_least_assign_sql(f'slice(v, {mi * subdim + 1}, {subdim})', pqc[mi])}).cid)"
                 )
+        width = max(dim if live_coarse else 0, subdim if live_pq else 0)
         ex = base.filter(F.col("v").isNotNull()).select(
             "v", F.expr(f"inline(array({','.join(entries)}))")
         )
@@ -1580,21 +1287,117 @@ def ivfpq_train_literals(
         rows = sums.select(
             "fam", "cid", _means_array(width).alias("cv")
         ).collect()
-        if it < iters:
+        if live_coarse:
             coarse = sorted(
                 (int(r["cid"]), list(r["cv"])[:dim])
                 for r in rows
-                if r["fam"] == -1
+                if r["fam"] == _COARSE
             )
-        if it < pq_iters:
+        if live_pq:
             nxt: dict = {mi: [] for mi in range(m)}
             for r in rows:
-                if r["fam"] >= 0:
+                if r["fam"] != _COARSE:
                     nxt[int(r["fam"])].append(
                         (int(r["cid"]), list(r["cv"])[:subdim])
                     )
             pqc = {mi: sorted(v) for mi, v in nxt.items()}
-    return coarse, pqc, base
+    return coarse, pqc
+
+
+def train_quantizers(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int = 10,
+    iters: int = 2,
+    m: int = PQ_M,
+    kcodes: int = PQ_K,
+    pq_iters: int = PQ_ITERS,
+    residual: bool = False,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The one trainer of the k-means / PQ / IVFPQ family: runs
+    :func:`lloyd_rounds` and is the only place that turns the trained
+    literals into index parts.  Returns
+    ``(base, cells, icents, codes, pqcents)``:
+
+    - ``base`` (vec_id, v) — the persisted training corpus, reusable by
+      the serve side (``v`` already array<double>);
+    - ``cells`` (vec_id, v, cell) — the base with the final coarse
+      argmin projected as a column (membership, no assignment table);
+    - ``icents`` (cell, cv, cnrm) — :func:`ivf_centroids` over ``cells``;
+    - ``codes`` (vec_id, m, code) — the final PQ argmin array,
+      posexploded (a pure map);
+    - ``pqcents`` (m, code, cv, cn2) — sub-codebooks re-derived from
+      the final assignment by decimal-exact per-dimension means (the
+      convention :func:`ivf_centroids` uses), plus each codeword's
+      exact-fold squared norm.
+
+    The coarse family trains over ``v``; the PQ families train fused
+    with it over ``v``, or — ``residual=True``, the FAISS ``IndexIVFPQ``
+    default — in a second :func:`lloyd_rounds` over the residuals
+    ``v − icents[cell]`` (:func:`pq_residuals`' arithmetic).  ``k = 0``
+    trains PQ only, ``kcodes = 0`` the coarse quantizer only.  A kind
+    with no seedable vector yields empty parts with the same schemas,
+    so every consumer degrades to empty results.  Everything except
+    ``base`` (and the residual regime's eager ``icents``) is lazy: the
+    parts are expressions over literals, with no training lineage to
+    cut."""
+    subdim = DIM // m
+    base = barrier(
+        spread_to_cores(
+            df.select(
+                F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v")
+            )
+        )
+    )
+    coarse, pqc = lloyd_rounds(
+        base, k, iters, m, 0 if residual else kcodes, pq_iters
+    )
+    if coarse:
+        cell = F.expr(f"({_least_assign_sql('v', coarse)}).cid")
+        cells = base.select("vec_id", "v", cell.alias("cell"))
+    else:
+        cells = base.select(
+            "vec_id", "v", F.lit(None).cast("long").alias("cell")
+        ).filter(F.lit(False))
+    icents = ivf_centroids(cells, "cell")
+    pq_base = base
+    if residual:
+        # consumed by the residuals and by the caller
+        icents = icents.localCheckpoint(eager=True)
+        pq_base = barrier(
+            spread_to_cores(
+                cells.join(
+                    F.broadcast(icents.select("cell", F.col("cv").alias("ccv"))),
+                    "cell",
+                ).select(
+                    "vec_id",
+                    F.zip_with("v", "ccv", lambda a, b: a - b).alias("v"),
+                )
+            )
+        )
+        _, pqc = lloyd_rounds(pq_base, m=m, kcodes=kcodes, pq_iters=pq_iters)
+    if pqc:
+        code_arr = F.expr(_pq_codes_arr_sql(pqc, m, subdim))
+    else:
+        pq_base = pq_base.filter(F.lit(False))
+        code_arr = F.lit(None).cast("array<bigint>")
+    codes = pq_base.select("vec_id", F.posexplode(code_arr).alias("m", "code"))
+    psums = (
+        pq_base.filter(F.col("v").isNotNull())
+        .select("v", F.posexplode(code_arr).alias("m", "code"))
+        .groupBy("m", "code")
+        .agg(
+            *_mean_aggs(
+                lambda i: f"try_element_at(v, CAST(m * {subdim} + {i} AS INT))",
+                subdim,
+            )
+        )
+    )
+    pqcents = psums.select(
+        "m", "code", _means_array(subdim).alias("cv")
+    ).select("m", "code", "cv", dot(F.col("cv"), F.col("cv")).alias("cn2"))
+    return base, cells, icents, codes, pqcents
 
 
 def knn_ivfpq_selftrained(
@@ -1612,89 +1415,25 @@ def knn_ivfpq_selftrained(
     refine_factor: int | None = None,
     n_queries: int | None = None,
 ) -> DataFrame:
-    """The self-contained IVFPQ rows' train+serve composition with the
-    FUSED trainer (:func:`ivfpq_train_literals`) and every serve-side
-    artifact derived MAP-SIDE from the one persisted base — no
-    kmeans-output join, no eager checkpoints (the artifacts are literal
-    expressions, so the serve plan carries no training lineage to cut):
-
-    - membership: the final coarse argmin as a projected column;
-    - probe centroids: :func:`ivf_centroids`'s exact aggregation shape
-      over that projection (in-plan — referenced once, broadcast);
-    - code table: the final PQ argmin array posexploded (pure map);
-    - sub-codebooks: pq_train's final re-derivation aggregation
-      verbatim (in-plan — referenced once, broadcast in the LUT).
-
-    Every expression is textually shared with the unfused path
-    (``_least_assign_sql`` / ``_pq_codes_arr_sql`` / ``_mean_aggs`` /
-    ``ivfpq_serve``), so the result is bit-identical to the r14
-    composition — the checkpoint/collect choreography was the only
-    thing removed.  ``refine_factor`` composes the exact re-rank
+    """The self-contained IVFPQ rows' train+serve composition: coarse
+    and PQ quantizers train fused in :func:`train_quantizers`, and every
+    serve-side part is an expression over its persisted base —
+    membership is the projected cell column, probe centroids and
+    sub-codebooks are in-plan aggregations (referenced once, broadcast),
+    the code table is a pure map.  Served by :func:`ivfpq_serve`;
+    ``refine_factor`` composes the exact re-rank
     (:func:`_refine_exact`) over the widened candidate list exactly as
     :func:`knn_ivfpq_refined`."""
-    trained = ivfpq_train_literals(
+    base, cells, icents, codes, pqcents = train_quantizers(
         df, id_col, vec_col, coarse_k, coarse_iters, m, kcodes, iters
     )
-    if trained is None:
-        # degenerate corpus (no seedable vectors): the unfused
-        # formulations own the empty-input semantics
-        cells = (
-            kmeans_assign(df, id_col, vec_col, k=coarse_k, iters=coarse_iters)
-            .select(
-                F.col("vec_id").alias(id_col),
-                F.col("cluster_id").alias("__cell"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        codes, pqcents = pq_train(df, id_col, vec_col, m, kcodes, iters)
-        pq = (
-            codes.localCheckpoint(eager=True),
-            pqcents.localCheckpoint(eager=True),
-        )
-        joined = df.join(cells, id_col)
-        if refine_factor is None:
-            return knn_ivfpq(
-                joined, id_col, vec_col, "__cell", query_mod, k, nprobe,
-                m, kcodes, iters, pq=pq,
-            )
-        return knn_ivfpq_refined(
-            joined, id_col, vec_col, "__cell", query_mod, k, nprobe,
-            refine_factor, m, kcodes, iters, pq=pq, n_queries=n_queries,
-        )
-    coarse, pqc, base = trained
-    subdim = DIM // m
-    cell_sql = f"({_least_assign_sql('v', coarse)}).cid"
-    with_cell = base.select("vec_id", "v", F.expr(cell_sql).alias("cell"))
-    membership = with_cell.select("vec_id", "cell")
-    icents = ivf_centroids(with_cell, "cell")
-    codes_sql = _pq_codes_arr_sql(pqc, m, subdim)
-    codes = base.select(
-        "vec_id", F.posexplode(F.expr(codes_sql)).alias("m", "code")
-    )
-    pex = base.filter(F.col("v").isNotNull()).select(
-        "v", F.posexplode(F.expr(codes_sql)).alias("m", "code")
-    )
-    psums = pex.groupBy("m", "code").agg(
-        *_mean_aggs(
-            lambda i: f"try_element_at(v, CAST(m * {subdim} + {i} AS INT))",
-            subdim,
-        )
-    )
-    pqcents = psums.select(
-        "m", "code", _means_array(subdim).alias("cv")
-    ).select("m", "code", "cv", dot(F.col("cv"), F.col("cv")).alias("cn2"))
-    queries = (
-        base.filter(F.col("vec_id") % query_mod == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            norm(F.col("v")).alias("qnrm"),
-        )
+    queries = base.filter(F.col("vec_id") % query_mod == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        norm(F.col("v")).alias("qnrm"),
     )
     ncand = k if refine_factor is None else refine_factor * k
-    out = ivfpq_serve(
-        queries, membership, icents, codes, pqcents, ncand, nprobe, m
-    )
+    out = ivfpq_serve(queries, cells, icents, codes, pqcents, ncand, nprobe, m)
     if refine_factor is None:
         return out
     cands = out.select("query_id", "neighbor_id")
@@ -1725,9 +1464,8 @@ def knn_pq(
     query_mod: int = 100,
     k: int = DEFAULT_K,
     m: int = PQ_M,
-    kcodes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    pq: tuple[DataFrame, DataFrame] | None = None,
+    *,
+    pq: tuple[DataFrame, DataFrame],
     base: DataFrame | None = None,
 ) -> DataFrame:
     """Exhaustive PQ search with ASYMMETRIC DISTANCE COMPUTATION (ADC) —
@@ -1740,7 +1478,7 @@ def knn_pq(
     broadcast), the corpus-side scan is an equi-join of the (vec_id, m,
     code) table against it on (m, code), then a per-(query, vector)
     fold of exactly m partials.  The full-precision corpus is never
-    read at serve time — only ``pq_train``'s code table — and nothing
+    read at serve time — only the code table — and nothing
     joins on an inequality.  Approximate cosine uses the reconstruction
     norm ``sqrt(Σ_m |c_{m,code}|²)`` (centroid cross-terms vanish:
     subspaces are disjoint coordinate blocks).
@@ -1751,12 +1489,13 @@ def knn_pq(
     family.  Composition with an IVF coarse quantizer (scan only probed
     cells' codes) is the FAISS IVFPQ layout; the cell equi-join of
     :func:`knn_ivf_int8` composes unchanged with this scorer.
+
+    ``pq=(codes, pqcents)`` is the trained code table and sub-codebooks
+    (:func:`train_quantizers` with ``k=0``, or a loaded index).
     """
     subdim = DIM // m
     base = base if base is not None else normed(df, id_col, vec_col)
-    codes, cents = (
-        pq if pq is not None else pq_train(df, id_col, vec_col, m, kcodes, iters)
-    )
+    codes, cents = pq
     queries = base.filter(F.col("vec_id") % query_mod == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -1826,9 +1565,8 @@ def knn_pq_refined(
     k: int = DEFAULT_K,
     refine_factor: int = PQ_REFINE_FACTOR,
     m: int = PQ_M,
-    kcodes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    pq: tuple[DataFrame, DataFrame] | None = None,
+    *,
+    pq: tuple[DataFrame, DataFrame],
     n_queries: int | None = None,
 ) -> DataFrame:
     """PQ ADC candidate generation + exact re-rank — FAISS's
@@ -1869,8 +1607,7 @@ def knn_pq_refined(
     ncand = refine_factor * k
     base = normed(df, id_col, vec_col)
     cands = knn_pq(
-        df, id_col, vec_col, query_mod, ncand, m, kcodes, iters, pq=pq,
-        base=base,
+        df, id_col, vec_col, query_mod, ncand, m, pq=pq, base=base,
     ).select("query_id", "neighbor_id")
     return _refine_exact(base, cands, query_mod, k, ncand, n_queries=n_queries)
 
@@ -1953,9 +1690,8 @@ def knn_ivfpq_refined(
     nprobe: int = 2,
     refine_factor: int = PQ_REFINE_FACTOR,
     m: int = PQ_M,
-    kcodes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    pq: tuple[DataFrame, DataFrame] | None = None,
+    *,
+    pq: tuple[DataFrame, DataFrame],
     ivf: DataFrame | None = None,
     n_queries: int | None = None,
 ) -> DataFrame:
@@ -1980,8 +1716,8 @@ def knn_ivfpq_refined(
     the fetch-join strategy falls to AQE, same rows either way."""
     ncand = refine_factor * k
     cands = knn_ivfpq(
-        df, id_col, vec_col, cell_col, query_mod, ncand, nprobe,
-        m, kcodes, iters, pq=pq, ivf=ivf,
+        df, id_col, vec_col, cell_col, query_mod, ncand, nprobe, m,
+        pq=pq, ivf=ivf,
     ).select("query_id", "neighbor_id")
     base = normed(df, id_col, vec_col)
     return _refine_exact(base, cands, query_mod, k, ncand, n_queries=n_queries)
@@ -1996,9 +1732,8 @@ def knn_ivfpq(
     k: int = DEFAULT_K,
     nprobe: int = 2,
     m: int = PQ_M,
-    kcodes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    pq: tuple[DataFrame, DataFrame] | None = None,
+    *,
+    pq: tuple[DataFrame, DataFrame],
     ivf: DataFrame | None = None,
 ) -> DataFrame:
     """IVF + PQ — the FAISS ``IVFPQ`` layout, the standard billion-scale
@@ -2016,23 +1751,17 @@ def knn_ivfpq(
     every float reduction is a sequenced fold, so the whole stack
     hash-gates cross-engine like its factors.
 
-    Pass ``pq=(codes, cents)`` (from :func:`pq_train`, ideally behind a
-    ``localCheckpoint`` lineage cut) to serve from a pre-trained code
-    table — production trains once and amortizes, and without the cut
-    the serve plan drags five k-means lineages (coarse + m sub-spaces)
-    through analysis/codegen, which is driver-heap-hostile even though
-    execution hits the persisted blocks (measured: 41s/OOM-at-1g
-    composed vs seconds with checkpointed training artifacts).
-    ``ivf`` optionally supplies pre-trained coarse centroids
+    ``pq=(codes, cents)`` is the trained code table and sub-codebooks
+    (:func:`train_quantizers`, or a loaded index) — production trains
+    once and amortizes.  ``ivf`` optionally supplies pre-trained coarse
+    centroids
     ``(cell, cv, cnrm)`` the same way (the persisted-index serve path,
     plans/similarity_queries.py::knn_ivfpq_stored); by default they are
     re-derived from the full-precision corpus per call.
     """
     base = _normed_with_cell(df, id_col, vec_col, cell_col)
     cents = ivf if ivf is not None else ivf_centroids(base, "cell")
-    codes, pqcents = (
-        pq if pq is not None else pq_train(df, id_col, vec_col, m, kcodes, iters)
-    )
+    codes, pqcents = pq
     queries = base.filter(F.col("vec_id") % query_mod == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -2058,7 +1787,7 @@ def ivfpq_serve(
     """The PURE IVFPQ serving dataflow — queries in, top-k out, every
     trained artifact passed in: ``queries`` (query_id, qv, qnrm),
     ``membership`` (vec_id, cell), ``cents`` (cell, cv, cnrm),
-    ``codes``/``pqcents`` from :func:`pq_train` or
+    ``codes``/``pqcents`` from :func:`train_quantizers` or
     plans/similarity_queries.py::ann_index_load.  This is the function
     a production deployment calls per query batch (the ``knn_ivfpq*``
     registry rows wrap it with their self-contained training for the
@@ -2357,9 +2086,9 @@ def pq_residuals(
     doubles, decimal-exact centroid means), textually mirrored in the
     oracle's ``v[i] - cv[i]``.  Scale: one broadcast of the centroid
     table over one corpus pass — no shuffle.  Returns
-    ``(vec_id, v, cell)`` where ``v`` IS the residual (named ``v`` so
-    :func:`pq_train` and the oracle's subspace CTEs consume it
-    unchanged)."""
+    ``(vec_id, v, cell)`` where ``v`` IS the residual (named ``v`` as in
+    the oracle's subspace CTEs; :func:`train_quantizers` applies the
+    same subtraction to train residual codebooks)."""
     base = df.select(
         F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v")
     )

@@ -351,24 +351,16 @@ def knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     recommended IVF configuration; ``knn_ivf`` (label cells) stays as the
     metadata-partitioned variant.
 
-    r15: the headline row projects the cell id as a literal-centroid
-    column (operators/similarity.py::kmeans_cents_literals) instead of
-    materializing the assignment table and joining it back — same
-    centroids, same argmin, no persist+count job, no corpus join.  The
-    amortized train/serve split (:func:`knn_ivf_kmeans_train` /
-    :func:`knn_ivf_kmeans_serve`) keeps the materialized-assignment
-    shape the bench stages time.
+    The cell id is the projected literal-centroid column of
+    operators/similarity.py::train_quantizers (coarse family only): no
+    assignment table, no corpus join.  The amortized train/serve split
+    (:func:`knn_ivf_kmeans_train` / :func:`knn_ivf_kmeans_serve`) keeps
+    the materialized-assignment shape the bench stages time.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    trained = SIM.kmeans_cents_literals(e, "vec_id", "embedding", k=10, iters=2)
-    if trained is None:  # degenerate corpus: the materialized path owns it
-        return knn_ivf_kmeans_serve(*knn_ivf_kmeans_train(spark, sf_dir))
-    cents, base = trained
-    bcell = base.withColumn(
-        "kcell", F.expr(f"({SIM._least_assign_sql('v', cents)}).cid")
-    )
+    _, cells, *_ = SIM.train_quantizers(e, "vec_id", "embedding", kcodes=0)
     return SIM.knn_ivf(
-        bcell, "vec_id", "v", "kcell", QUERY_MOD, K, IVF_KMEANS_NPROBE,
+        cells, "vec_id", "v", "cell", QUERY_MOD, K, IVF_KMEANS_NPROBE,
     )
 
 
@@ -493,34 +485,13 @@ FROM ranked WHERE rank <= {K}
 def knn_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (k-means coarse quantizer) + int8 candidate codes — the
     production serving stack: probe in float, score compressed.  See
-    operators/similarity.py::knn_ivf_int8.  r15: the cell id is a
-    literal-centroid projected column (same centroids via
-    kmeans_cents_literals, same argmin expression) instead of a
-    materialized assignment joined back — the persist+count job and the
-    corpus-wide join are gone; values are bit-identical."""
-    from pyspark.sql import functions as F
-
+    operators/similarity.py::knn_ivf_int8.  The cell id is the
+    projected literal-centroid column of the one trainer, as in
+    :func:`knn_ivf_kmeans`."""
     e = load_table(spark, sf_dir, "embeddings")
-    trained = SIM.kmeans_cents_literals(e, "vec_id", "embedding", k=10, iters=2)
-    if trained is None:  # degenerate corpus: empty assignment, empty serve
-        from data_pipelines_using_llm_spark.operators.caching import barrier
-
-        cells = barrier(
-            SIM.kmeans_assign(e, "vec_id", "embedding", k=10, iters=2).select(
-                "vec_id", F.col("cluster_id").alias("kcell")
-            )
-        )
-        cells.count()
-        return SIM.knn_ivf_int8(
-            e.join(cells, "vec_id"), "vec_id", "embedding", "kcell",
-            QUERY_MOD, K, IVF_KMEANS_NPROBE,
-        )
-    cents, base = trained
-    bcell = base.withColumn(
-        "kcell", F.expr(f"({SIM._least_assign_sql('v', cents)}).cid")
-    )
+    _, cells, *_ = SIM.train_quantizers(e, "vec_id", "embedding", kcodes=0)
     return SIM.knn_ivf_int8(
-        bcell, "vec_id", "v", "kcell", QUERY_MOD, K, IVF_KMEANS_NPROBE,
+        cells, "vec_id", "v", "cell", QUERY_MOD, K, IVF_KMEANS_NPROBE,
     )
 
 
@@ -853,9 +824,8 @@ def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored against the 2-byte code table via a broadcast lookup table.
     See operators/similarity.py::knn_pq for the 100 TB plan argument."""
     e = load_table(spark, sf_dir, "embeddings")
-    codes, cents = SIM.pq_train(e, "vec_id", "embedding")
-    pq = (codes.localCheckpoint(eager=True), cents.localCheckpoint(eager=True))
-    return SIM.knn_pq(e, "vec_id", "embedding", QUERY_MOD, K, pq=pq)
+    *_, codes, cents = SIM.train_quantizers(e, "vec_id", "embedding", k=0)
+    return SIM.knn_pq(e, "vec_id", "embedding", QUERY_MOD, K, pq=(codes, cents))
 
 
 def _sql_dot_n(a: str, b: str, dim: int) -> str:
@@ -1023,10 +993,9 @@ def knn_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     knn_pq floors at 0.15.  See operators/similarity.py::knn_pq_refined
     for the 100 TB plan argument and SCALE.md for the recall record."""
     e = load_table(spark, sf_dir, "embeddings")
-    codes, cents = SIM.pq_train(e, "vec_id", "embedding")
-    pq = (codes.localCheckpoint(eager=True), cents.localCheckpoint(eager=True))
+    *_, codes, cents = SIM.train_quantizers(e, "vec_id", "embedding", k=0)
     return SIM.knn_pq_refined(
-        e, "vec_id", "embedding", QUERY_MOD, K, pq=pq,
+        e, "vec_id", "embedding", QUERY_MOD, K, pq=(codes, cents),
         n_queries=_n_queries_cached(spark, sf_dir),
     )
 
@@ -1102,15 +1071,11 @@ FROM ranked WHERE rank <= {K}
 
 def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (k-means cells) + PQ codes — the FAISS IVFPQ serving stack:
-    probe float, score compressed via the ADC lookup table.  r15: the
-    coarse and PQ Lloyd chains train FUSED over one persisted base
-    (operators/similarity.py::ivfpq_train_literals — one corpus-scan
-    job per round instead of two sequential chains), and every serving
-    artifact is a literal-centroid expression over that base, so the
-    eager localCheckpoint cuts (and the k-means-output join) are gone —
-    there is no training lineage left to cut.  Bit-identical to the
-    checkpointed composition (same argmin/mean expressions, same serve
-    dataflow); the oracle is unchanged."""
+    probe float, score compressed via the ADC lookup table.  The coarse
+    and PQ quantizers train fused in one Lloyd loop (one corpus-scan
+    job per round) and every serving part is a literal-centroid
+    expression over the persisted training base
+    (operators/similarity.py::knn_ivfpq_selftrained)."""
     e = load_table(spark, sf_dir, "embeddings")
     return SIM.knn_ivfpq_selftrained(
         e, "vec_id", "embedding", QUERY_MOD, K, IVF_KMEANS_NPROBE,
@@ -1192,8 +1157,8 @@ def knn_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full production ANN serving stack under one hash gate —
     FAISS ``IndexRefineFlat(IndexIVFPQ)``: k-means cells bound the scan,
     PQ codes bound the bytes, exact re-rank restores exact ordering
-    over each query's top-C survivors.  r15: fused literal-centroid
-    training, artifacts as expressions — see :func:`knn_ivfpq`."""
+    over each query's top-C survivors.  Trained and served as
+    :func:`knn_ivfpq`."""
     e = load_table(spark, sf_dir, "embeddings")
     return SIM.knn_ivfpq_selftrained(
         e, "vec_id", "embedding", QUERY_MOD, K, IVF_KMEANS_NPROBE,
@@ -1296,34 +1261,20 @@ def _residual_pq_parts(
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
     """Shared TRAIN stage of the residual-IVFPQ family: coarse k-means
     cells, float cell centroids, then PQ codebooks trained on the
-    RESIDUALS ``x − c_cell`` (operators/similarity.py::pq_residuals) —
-    the standard FAISS ``IndexIVFPQ`` training semantics.  Returns
-    ``(e, cells, icents, codes, pqcents)`` with every trained artifact
-    behind an eager ``localCheckpoint`` lineage cut; cached per
-    (session, sf_dir) so the plain and refined residual gate rows share
-    one training (the r11-task-5 de-duplication discipline)."""
+    RESIDUALS ``x − c_cell`` — the standard FAISS ``IndexIVFPQ``
+    training semantics (operators/similarity.py::train_quantizers with
+    ``residual=True``).  Returns ``(e, cells, icents, codes, pqcents)``;
+    cached per (session, sf_dir) so the plain and refined residual gate
+    rows share one training."""
     key = (spark.sparkContext.applicationId, sf_dir)
     cached = _RESIDUAL_PARTS_CACHE.get(key)
     if cached is not None:
         return cached
     e = load_table(spark, sf_dir, "embeddings")
-    cells = (
-        SIM.kmeans_assign(e, "vec_id", "embedding", k=10, iters=2)
-        .select("vec_id", F.col("cluster_id").alias("cell"))
-        .localCheckpoint(eager=True)
+    _, cells, icents, codes, pqcents = SIM.train_quantizers(
+        e, "vec_id", "embedding", residual=True
     )
-    icents = SIM.ivf_centroids(
-        SIM.normed(e, "vec_id", "embedding").join(cells, "vec_id"), "cell"
-    ).localCheckpoint(eager=True)
-    resid = SIM.pq_residuals(e, "vec_id", "embedding", cells, icents)
-    codes, pqcents = SIM.pq_train(resid, "vec_id", "v")
-    parts = (
-        e,
-        cells,
-        icents,
-        codes.localCheckpoint(eager=True),
-        pqcents.localCheckpoint(eager=True),
-    )
+    parts = (e, cells, icents, codes, pqcents)
     _RESIDUAL_PARTS_CACHE[key] = parts
     return parts
 
@@ -1587,16 +1538,16 @@ def ann_index_train(
     source: DataFrame | None = None,
     residual: bool = False,
 ) -> int:
-    """TRAIN step of the IVFPQ train/serve split (r10 verdict task 1):
-    run the coarse k-means, the IVF centroid derivation, and the PQ
-    codebook training ONCE and persist the complete index — cell
+    """TRAIN step of the IVFPQ train/serve split: run the one trainer
+    (operators/similarity.py::train_quantizers — coarse k-means, IVF
+    centroids, PQ codebooks) ONCE and persist the complete index — cell
     membership, float coarse centroids, code table, sub-codebooks — as
     ONE versioned artifact (sinks/versioned.py: snapshot + atomic
     pointer flip), so a crash mid-train can never publish half an index
-    and yesterday's index stays time-travelable.  This is the durable
-    form of the ``localCheckpoint`` lineage cuts the in-plan
-    ``knn_ivfpq`` query applies: production trains once, then any
-    number of :func:`ann_index_load` serves amortize it.
+    and yesterday's index stays time-travelable.  The per-vector parts
+    are projections of the persisted training base computed inside the
+    single artifact-write job.  Production trains once, then any number
+    of :func:`ann_index_load` serves amortize it.
 
     Artifact layout: one table, four row kinds under a unified schema
     (kind, vec_id, cell, m, code, cv, w) —
@@ -1612,7 +1563,7 @@ def ann_index_train(
     training SLICE for the incremental-extension path,
     :func:`ann_index_extend`).  ``residual=True`` trains the PQ
     codebooks on the cell-centered residuals ``x − c_cell`` (the FAISS
-    ``IndexIVFPQ`` default, :func:`SIM.pq_residuals`) and RECORDS the
+    ``IndexIVFPQ`` default) and RECORDS the
     encoding in the artifact's meta row, so downstream maintenance
     (:func:`ann_index_extend`) and serving know which ADC math applies
     — a residual index served with raw-PQ arithmetic (or extended with
@@ -1628,103 +1579,9 @@ def ann_index_train(
         if source is not None
         else load_table(spark, sf_dir, "embeddings")
     )
-    # r15 (guide §1.2-1, §2.4): training artifacts are control-plane
-    # literals, so the raw path trains coarse+PQ FUSED over one
-    # persisted base (one scan job per Lloyd round, one seed collect)
-    # and the per-vector parts (cells, codes) are projected columns of
-    # that base computed INSIDE the single artifact-write job — the
-    # eager checkpoint of the assignment and the corpus-wide
-    # normed⋈cells join are gone.  Values are bit-identical (same
-    # argmin / decimal-mean expressions; the stored-serve gates share
-    # the in-plan oracles verbatim).
-    if not residual:
-        trained = SIM.ivfpq_train_literals(e, "vec_id", "embedding")
-        if trained is not None:
-            coarse, pqc, base = trained
-            subdim = SIM.DIM // SIM.PQ_M
-            cell_sql = f"({SIM._least_assign_sql('v', coarse)}).cid"
-            with_cell = base.select(
-                "vec_id", "v", F.expr(cell_sql).alias("cell")
-            )
-            cells = with_cell.select("vec_id", "cell")
-            icents = SIM.ivf_centroids(with_cell, "cell")
-            codes_sql = SIM._pq_codes_arr_sql(pqc, SIM.PQ_M, subdim)
-            codes = base.select(
-                "vec_id", F.posexplode(F.expr(codes_sql)).alias("m", "code")
-            )
-            pex = base.filter(F.col("v").isNotNull()).select(
-                "v", F.posexplode(F.expr(codes_sql)).alias("m", "code")
-            )
-            psums = pex.groupBy("m", "code").agg(
-                *SIM._mean_aggs(
-                    lambda i: (
-                        f"try_element_at(v, CAST(m * {subdim} + {i} AS INT))"
-                    ),
-                    subdim,
-                )
-            )
-            pqcents = psums.select(
-                "m", "code", SIM._means_array(subdim).alias("cv")
-            ).select(
-                "m", "code", "cv",
-                SIM.dot(F.col("cv"), F.col("cv")).alias("cn2"),
-            )
-            return versioned_write(
-                _ann_index_pack(
-                    cells, icents, codes, pqcents, residual=False
-                ),
-                table_dir,
-            )
-    if residual:
-        trained = SIM.kmeans_cents_literals(e, "vec_id", "embedding")
-        if trained is not None:
-            # residual regime (r15): the coarse quantizer is literal, so
-            # the cell id is a projected column of the persisted base —
-            # pq_residuals' corpus-wide base⋈cells join is gone; the
-            # residual subtraction is the same zip_with over the same
-            # broadcast centroid table.  icents stays an eager
-            # localCheckpoint (consumed by both the residual computation
-            # and the artifact pack).
-            coarse, base = trained
-            with_cell = base.select(
-                "vec_id", "v",
-                F.expr(f"({SIM._least_assign_sql('v', coarse)}).cid").alias(
-                    "cell"
-                ),
-            )
-            cells = with_cell.select("vec_id", "cell")
-            icents = SIM.ivf_centroids(with_cell, "cell").localCheckpoint(
-                eager=True
-            )
-            pq_src = with_cell.join(
-                F.broadcast(icents.select("cell", F.col("cv").alias("ccv"))),
-                "cell",
-            ).select(
-                "vec_id",
-                F.zip_with("v", "ccv", lambda a, b: a - b).alias("v"),
-                "cell",
-            )
-            codes, pqcents = SIM.pq_train(pq_src, "vec_id", "v")
-            return versioned_write(
-                _ann_index_pack(
-                    cells, icents, codes, pqcents, residual=True
-                ),
-                table_dir,
-            )
-    cells = (
-        SIM.kmeans_assign(e, "vec_id", "embedding", k=10, iters=2)
-        .select("vec_id", F.col("cluster_id").alias("cell"))
-        .localCheckpoint(eager=True)
+    _, cells, icents, codes, pqcents = SIM.train_quantizers(
+        e, "vec_id", "embedding", residual=residual
     )
-    icents = SIM.ivf_centroids(
-        SIM.normed(e, "vec_id", "embedding").join(cells, "vec_id"), "cell"
-    )
-    if residual:
-        icents = icents.localCheckpoint(eager=True)  # consumed twice
-        pq_src = SIM.pq_residuals(e, "vec_id", "embedding", cells, icents)
-        codes, pqcents = SIM.pq_train(pq_src, "vec_id", "v")
-    else:
-        codes, pqcents = SIM.pq_train(e, "vec_id", "embedding")
     return versioned_write(
         _ann_index_pack(cells, icents, codes, pqcents, residual=residual),
         table_dir,

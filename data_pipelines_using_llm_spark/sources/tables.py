@@ -71,16 +71,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+_SIZE_SUFFIXES = (
+    ("kb", 1 << 10),
+    ("mb", 1 << 20),
+    ("gb", 1 << 30),
+    ("tb", 1 << 40),
+    ("k", 1 << 10),
+    ("m", 1 << 20),
+    ("g", 1 << 30),
+    ("t", 1 << 40),
+    ("b", 1),
+)  # two-letter suffixes first: "128mb" also ends with "b"
+
+
 def _size_suffix_bytes(v: str) -> int:
-    """Parse a Spark size conf value ("134217728", "128m", "1g") to bytes."""
+    """Parse a Spark size conf value ("134217728", "134217728b", "128m",
+    "128mb", "1g", "1gb", ...) to bytes; anything else raises
+    ValueError."""
     s = v.strip().lower()
-    mult = 1
-    for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
+    for suf, mult in _SIZE_SUFFIXES:
         if s.endswith(suf):
-            s = s[: -len(suf)]
-            mult = m
-            break
-    return int(float(s) * mult)
+            return int(float(s[: -len(suf)]) * mult)
+    return int(float(s))
 
 
 def spread_to_cores(df: DataFrame) -> DataFrame:
@@ -122,12 +134,9 @@ def spread_to_cores(df: DataFrame) -> DataFrame:
             total += os.path.getsize(path)
         except OSError:
             return df  # non-local / unstattable: assume scale, no-op
-    try:
-        max_pb = _size_suffix_bytes(
-            session.conf.get("spark.sql.files.maxPartitionBytes")
-        )
-    except Exception:
-        max_pb = 128 * 1024 * 1024
+    max_pb = _size_suffix_bytes(
+        session.conf.get("spark.sql.files.maxPartitionBytes")
+    )
     est_tasks = max(1, -(-total // max_pb))
     if est_tasks < want:
         return df.repartition(want)

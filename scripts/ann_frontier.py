@@ -146,7 +146,7 @@ def main() -> None:
 
     # PQ family: codes trained once behind a lineage cut (the serve-time
     # contract of knn_pq/knn_ivfpq), excluded from serve timings like IVF
-    codes, pqcents = SIM.pq_train(e, "vec_id", "embedding")
+    *_, codes, pqcents = SIM.train_quantizers(e, "vec_id", "embedding", k=0)
     pq = (
         codes.localCheckpoint(eager=True),
         pqcents.localCheckpoint(eager=True),
@@ -195,15 +195,14 @@ def main() -> None:
         )
 
     # Residual-encoded IVFPQ (r11 verdict task 1): PQ over x - c_cell —
-    # the standard FAISS IndexIVFPQ semantics.  Same trained coarse
-    # quantizer; codebooks retrained on residuals (train cost excluded
-    # from serve timings like the rest of the PQ family).
-    cells_r = cells.select("vec_id", F.col("kcell").alias("cell"))
-    icents_r = SIM.ivf_centroids(
-        SIM.normed(e, "vec_id", "embedding").join(cells_r, "vec_id"), "cell"
-    ).localCheckpoint(eager=True)
-    resid = SIM.pq_residuals(e, "vec_id", "embedding", cells_r, icents_r)
-    codes_r, pqcents_r = SIM.pq_train(resid, "vec_id", "v")
+    # the standard FAISS IndexIVFPQ semantics.  The one trainer's coarse
+    # quantizer is the same k-means as above (identical centroids);
+    # codebooks are trained on residuals (train cost excluded from serve
+    # timings like the rest of the PQ family).
+    _, cells_r, icents_r, codes_r, pqcents_r = SIM.train_quantizers(
+        e, "vec_id", "embedding", residual=True
+    )
+    cells_r = cells_r.select("vec_id", "cell").localCheckpoint(eager=True)
     codes_r = codes_r.localCheckpoint(eager=True)
     pqcents_r = pqcents_r.localCheckpoint(eager=True)
     queries = (

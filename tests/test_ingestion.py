@@ -390,3 +390,54 @@ def test_read_binary_dir_media_landing(spark, tmp_path):
     )
     stats = {r["media_id"]: r["n_bytes"] for r in decode_stats(media).collect()}
     assert sorted(stats.values()) == [2, 21]
+
+
+@pytest.mark.parametrize(
+    "value, expected",
+    [
+        ("134217728", 134217728),
+        ("134217728b", 134217728),
+        ("128m", 128 << 20),
+        ("128mb", 128 << 20),
+        ("128MB", 128 << 20),
+        (" 64kb ", 64 << 10),
+        ("64k", 64 << 10),
+        ("1g", 1 << 30),
+        ("1gb", 1 << 30),
+    ],
+)
+def test_size_suffix_bytes_parses_spark_size_strings(value, expected):
+    from data_pipelines_using_llm_spark.sources.tables import _size_suffix_bytes
+
+    assert _size_suffix_bytes(value) == expected
+
+
+@pytest.mark.parametrize("value", ["", "mb", "12xb", "1.2.3g"])
+def test_size_suffix_bytes_rejects_malformed_values(value):
+    from data_pipelines_using_llm_spark.sources.tables import _size_suffix_bytes
+
+    with pytest.raises(ValueError):
+        _size_suffix_bytes(value)
+
+
+def test_spread_to_cores_honours_two_letter_size_suffix(spark):
+    """``maxPartitionBytes`` set as "1kb" (Spark accepts it and returns
+    it verbatim) is read as 1 KiB: the ~190 KB embeddings file then
+    already scans as more tasks than cores, so no repartition is added
+    (misread as the 128 MB fallback, the one-task scan would be spread
+    to every core)."""
+    from data_pipelines_using_llm_spark.sources.tables import (
+        load_table,
+        spread_to_cores,
+    )
+    from tests.conftest import SF0001
+
+    key = "spark.sql.files.maxPartitionBytes"
+    df = load_table(spark, SF0001, "embeddings")
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1kb")
+    try:
+        assert spark.conf.get(key) == "1kb"
+        assert spread_to_cores(df) is df
+    finally:
+        spark.conf.set(key, old)

@@ -90,8 +90,8 @@ def test_knn_pq_structure_and_recall_floor(spark):
     assert per_q, "no queries produced"
     for q, ranks in per_q.items():
         assert sorted(ranks) == list(range(1, len(ranks) + 1)), q
-    codes, cents = SIM.pq_train(
-        load_table(spark, sf, "embeddings"), "vec_id", "embedding"
+    *_, codes, cents = SIM.train_quantizers(
+        load_table(spark, sf, "embeddings"), "vec_id", "embedding", k=0
     )
     cd = codes.toPandas()
     assert set(cd["m"]) == set(range(SIM.PQ_M))
@@ -638,33 +638,6 @@ def test_hard_negatives_below_threshold_and_ranked(spark):
         .collect()
     )
     assert all(r["mx"] == r["n"] <= HARD_NEG_K for r in ranks)
-
-
-def test_kmeans_assign_arrow_agrees_with_exact(spark):
-    """The GEMM assignment path must reproduce the fold-exact variant:
-    >=99% identical assignments at sf0.01 (flips possible only on exact
-    distance near-ties in the last ulp), distances equal to 1e-6 where
-    assignments agree."""
-    from data_pipelines_using_llm_spark.operators import similarity as SIM
-    from data_pipelines_using_llm_spark.sources.tables import load_table
-
-    sf = "/root/testdata/sf0.01"
-    e = load_table(spark, sf, "embeddings")
-    exact = {
-        r["vec_id"]: (r["cluster_id"], r["dist"])
-        for r in SIM.kmeans_assign(e, "vec_id", "embedding", 10, 2).collect()
-    }
-    arrow = {
-        r["vec_id"]: (r["cluster_id"], r["dist"])
-        for r in SIM.kmeans_assign_arrow(
-            e, "vec_id", "embedding", 10, 2
-        ).collect()
-    }
-    assert exact.keys() == arrow.keys()
-    same = [v for v in exact if exact[v][0] == arrow[v][0]]
-    assert len(same) / len(exact) >= 0.99
-    for v in same:
-        assert abs(exact[v][1] - arrow[v][1]) <= 1e-6, v
 
 
 def test_farthest_point_sample_properties(spark):
@@ -1283,3 +1256,161 @@ def test_residual_encoding_recall_floor_and_gain(spark):
     raw = recall(SQ.knn_ivfpq(spark, sf).collect())
     assert res >= 0.15, res
     assert res >= raw, (res, raw)
+
+
+_KNN_DTYPES = [
+    ("query_id", "bigint"),
+    ("neighbor_id", "bigint"),
+    ("cosine_sim", "double"),
+    ("rank", "int"),
+]
+_KMEANS_DTYPES = [
+    ("vec_id", "bigint"),
+    ("cluster_id", "bigint"),
+    ("dist", "double"),
+]
+
+
+def _write_embeddings(sf_dir, ids: list[int]) -> None:
+    """An ``embeddings.parquet`` with the corpus schema (vec_id int64,
+    embedding list<float32> of DIM, label int32) and deterministic
+    vectors."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipelines_using_llm_spark.operators import similarity as SIM
+
+    emb = [
+        [float(((i * 31 + j * 17) % 23) - 11) / 7.0 for j in range(SIM.DIM)]
+        for i in ids
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(emb, pa.list_(pa.float32())),
+                "label": pa.array([i % 3 for i in ids], pa.int32()),
+            }
+        ),
+        f"{sf_dir}/embeddings.parquet",
+    )
+
+
+def test_quantizer_training_on_degenerate_corpora(spark, tmp_path):
+    """Defined behaviour where seeding finds nothing to seed from: an
+    empty corpus, a corpus whose ids are all >= PQ_K (no coarse and no
+    PQ seed; ids 100/200 still make queries) and a corpus with ids only
+    in [10, PQ_K) (PQ seeds, no coarse seeds).  Every k-means / PQ /
+    IVFPQ composition returns zero rows with its usual schema instead
+    of failing on an empty literal argmin, and the index artifact holds
+    exactly the parts the seeds allow — in the PQ-only corpus the raw
+    index keeps its PQ codes and codebooks while the residual index
+    (PQ over residuals to cells that do not exist) is empty."""
+    from data_pipelines_using_llm_spark.operators import similarity as SIM
+    from data_pipelines_using_llm_spark.sinks.versioned import read_version
+    from data_pipelines_using_llm_spark.sources.tables import load_table
+
+    corpora = {
+        "empty": ([], {"meta": 1}, {"meta": 1}),
+        "no_seeds": (
+            list(range(SIM.PQ_K, SIM.PQ_K + 40)) + [100, 200],
+            {"meta": 1},
+            {"meta": 1},
+        ),
+        "pq_seeds_only": (
+            list(range(10, SIM.PQ_K)),
+            {"code": 24, "meta": 1, "pcent": 24},
+            {"meta": 1},
+        ),
+    }
+    rows = (
+        "knn_ivf_kmeans", "knn_ivf_int8", "knn_pq", "knn_pq_refined",
+        "knn_ivfpq", "knn_ivfpq_refined", "knn_ivfpq_residual",
+        "knn_ivfpq_residual_refined",
+    )
+    for name, (ids, raw_kinds, res_kinds) in corpora.items():
+        sf = tmp_path / name
+        sf.mkdir()
+        _write_embeddings(sf, ids)
+        sf = str(sf)
+        e = load_table(spark, sf, "embeddings")
+        km = SIM.kmeans_assign(e, "vec_id", "embedding", k=10, iters=2)
+        assert (km.count(), km.dtypes) == (0, _KMEANS_DTYPES), name
+        for row in rows:
+            df = getattr(SQ, row)(spark, sf)
+            assert (df.count(), df.dtypes) == (0, _KNN_DTYPES), (name, row)
+        dd = SQ.dedup_semantic(spark, sf)
+        assert dd.count() == 0 and dd.columns == [
+            "vec_id", "cluster_id", "kept", "dup_of"
+        ], name
+        for residual, want in ((False, raw_kinds), (True, res_kinds)):
+            tdir = str(tmp_path / f"{name}_idx_{residual}")
+            SQ.ann_index_train(spark, sf, tdir, residual=residual)
+            kinds = {
+                r["kind"]: r["count"]
+                for r in read_version(spark, tdir)
+                .groupBy("kind")
+                .count()
+                .collect()
+            }
+            assert kinds == want, (name, residual, kinds)
+
+
+def test_fused_training_equals_per_family_training(spark):
+    """The Lloyd loop trains the coarse and PQ families fused (one scan
+    job per round); fusing must not change one bit of either: the
+    coarse centroids of the fused run equal the coarse-only run's, its
+    codebooks equal the PQ-only run's, as exact equality of the
+    collected doubles — also when the families run different round
+    counts, and for the projected parts (probe centroids, codes,
+    sub-codebooks) the one trainer derives from them."""
+    from data_pipelines_using_llm_spark.operators import similarity as SIM
+    from data_pipelines_using_llm_spark.operators.caching import barrier
+    from data_pipelines_using_llm_spark.sources.tables import load_table
+
+    e = load_table(spark, SF_DIR, "embeddings")
+    base = barrier(
+        e.select("vec_id", SIM.to_double("embedding").alias("v"))
+    )
+    for iters, pq_iters in ((2, SIM.PQ_ITERS), (3, 1)):
+        fused = SIM.lloyd_rounds(
+            base, 10, iters, SIM.PQ_M, SIM.PQ_K, pq_iters
+        )
+        coarse_only, no_pq = SIM.lloyd_rounds(base, 10, iters)
+        no_coarse, pq_only = SIM.lloyd_rounds(
+            base, m=SIM.PQ_M, kcodes=SIM.PQ_K, pq_iters=pq_iters
+        )
+        assert no_pq == {} and no_coarse == []
+        assert len(coarse_only) == 10 and len(pq_only) == SIM.PQ_M
+        assert fused == (coarse_only, pq_only), (iters, pq_iters)
+
+    def collected(parts):
+        _, cells, icents, codes, pqcents = parts
+        return (
+            sorted((r["vec_id"], r["cell"]) for r in cells.collect()),
+            sorted((r["cell"], tuple(r["cv"]), r["cnrm"]) for r in icents.collect()),
+            sorted(tuple(r) for r in codes.collect()),
+            sorted(
+                (r["m"], r["code"], tuple(r["cv"]), r["cn2"])
+                for r in pqcents.collect()
+            ),
+        )
+
+    f_cells, f_icents, f_codes, f_pqcents = collected(
+        SIM.train_quantizers(e, "vec_id", "embedding")
+    )
+    c_cells, c_icents, c_codes, _ = collected(
+        SIM.train_quantizers(e, "vec_id", "embedding", kcodes=0)
+    )
+    p_cells, _, p_codes, p_pqcents = collected(
+        SIM.train_quantizers(e, "vec_id", "embedding", k=0)
+    )
+    assert (f_cells, f_icents) == (c_cells, c_icents) and f_cells
+    assert (f_codes, f_pqcents) == (p_codes, p_pqcents) and f_codes
+    assert c_codes == [] and p_cells == []
+    # the coarse family alone is kmeans_assign's quantizer
+    km = {
+        r["vec_id"]: r["cluster_id"]
+        for r in SIM.kmeans_assign(e, "vec_id", "embedding").collect()
+    }
+    assert dict(f_cells) == km
